@@ -9039,7 +9039,7 @@ ORACLE_SQL["canonical_url_election"] = """
     FROM ranked WHERE rn = 1
 """
 
-ORACLE_SQL["sitemap_lastmod_schedule"] = """
+ORACLE_SQL["sitemap_lastmod_schedule"] = r"""
     WITH o AS (SELECT * FROM orders WHERE o_orderkey < 3000),
     entries AS (
       SELECT (o_custkey % 10) AS h,

@@ -1,32 +1,21 @@
-"""URL-seen set, cuckoo-filter variant: partitioned, DELETABLE, same
-distributed-directory contract as the Bloom variant (operators/seen.py).
+"""URL-seen set, cuckoo-filter codec: the DELETABLE cell format behind
+the shared sharded directory (operators/seen.ShardDirectory — sharding,
+build/upsert, both probe regimes and the filter_unseen D1 contract are
+documented there).
 
 The north star names a "partitioned Bloom/cuckoo-filter URL-seen set";
-the Bloom shards cover the append-only regime, and this module adds the
+the Bloom cells cover the append-only regime, and this codec adds the
 cuckoo filter (Fan et al. 2014, "Cuckoo Filter: Practically Better Than
 Bloom", CoNEXT) for the capability Bloom fundamentally lacks: DELETION —
 the recrawl path (recrawl_schedule query) evicts due URLs from the seen
 set so the frontier re-admits them, without rebuilding the directory.
 
-Shape mirrors BloomShardSet exactly (duck-typed — plans/wave.filter_unseen
-accepts either):
-
-  * keys shard by ``h1 % n_shards``; each shard holds one cuckoo table,
-    ``(n_buckets × slots)`` uint16 fingerprints, as ONE binary cell in a
-    ``(shard int, bits binary)`` DataFrame row — executor-resident, never
-    driver-collected on the build path;
-  * probes are adaptive: small directories broadcast and probe map-side
-    (zero shuffle), large directories probe via cogrouped applyInPandas
-    (candidates shuffle once on shard id, each task sees only its slice);
-  * probe-negative rows are DEFINITELY unseen (no false negatives for
-    inserted keys), probe-positives go to the exact confirm join — the
-    same two-tier D1 contract as Bloom.
-
-Partial-key cuckoo hashing: bucket1 = high bits of h1; fingerprint
-f = 16 bits of h2 (0 reserved for empty, remapped to 1); bucket2 =
-bucket1 XOR spread(f). Because bucket2 is derivable from (bucket1, f)
-alone, an evicted fingerprint can be re-homed without the original key —
-which is what makes the BULK build vectorizable:
+Each shard's cell is one cuckoo table, ``(n_buckets × slots)`` uint16
+fingerprints. Partial-key cuckoo hashing: bucket1 = high bits of h1;
+fingerprint f = 16 bits of h2 (0 reserved for empty, remapped to 1);
+bucket2 = bucket1 XOR spread(f). Because bucket2 is derivable from
+(bucket1, f) alone, an evicted fingerprint can be re-homed without the
+original key — which is what makes the BULK build vectorizable:
 
   round r:  try to place every pending (f, b) into bucket b — sort by
             bucket, rank within bucket, scatter into the bucket's free
@@ -48,12 +37,12 @@ equivalence vs exact joins and the Bloom path is pytest-pinned
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from functools import partial
 
-from licenta_crawler_spark.operators.seen import SHARD_SCHEMA, with_hash_cols
+import numpy as np
+from pyspark.sql import DataFrame
+
+from licenta_crawler_spark.operators.seen import CellCodec, ShardDirectory
 
 _FP_SPREAD = np.uint64(0x5BD1E995)  # odd multiplier spreading f over buckets
 
@@ -73,21 +62,17 @@ def _alt_bucket(bucket: np.ndarray, f: np.ndarray, n_buckets: int) -> np.ndarray
     return (bucket.astype(np.uint64) ^ spread).astype(np.int64)
 
 
-def _bucket1(h1: np.ndarray, n_buckets: int) -> np.ndarray:
-    # high bits: the low bits already picked the shard (h1 % n_shards)
-    return ((h1 >> np.uint64(20)) & np.uint64(n_buckets - 1)).astype(np.int64)
+def _fpb(table: np.ndarray, h1: np.ndarray, h2: np.ndarray):
+    """(fingerprint, bucket1, n_buckets) of hashed keys for ``table``.
+    bucket1 takes high bits: the low bits already picked the shard
+    (h1 % n_shards)."""
+    n_buckets = table.shape[0]
+    b1 = ((h1 >> np.uint64(20)) & np.uint64(n_buckets - 1)).astype(np.int64)
+    return _fingerprint(h2), b1, n_buckets
 
 
-def _fpb(pdf: pd.DataFrame, n_buckets: int):
-    """(fingerprint, bucket1) arrays for a hashed-key pandas batch."""
-    h1 = pdf["_h1"].to_numpy(dtype=np.uint64)
-    h2 = pdf["_h2"].to_numpy(dtype=np.uint64)
-    return _fingerprint(h2), _bucket1(h1, n_buckets)
-
-
-def _decode(blob, n_buckets: int, slots: int) -> np.ndarray:
-    return (np.frombuffer(blob, dtype=np.uint16)
-            .reshape(n_buckets, slots).copy())
+def _decode(blob, slots: int) -> np.ndarray:
+    return np.frombuffer(blob, dtype=np.uint16).reshape(-1, slots).copy()
 
 
 def _rank_within(groups: np.ndarray) -> np.ndarray:
@@ -98,14 +83,13 @@ def _rank_within(groups: np.ndarray) -> np.ndarray:
     return idx - np.maximum.accumulate(np.where(first, idx, 0))
 
 
-def _bulk_insert(table: np.ndarray, f: np.ndarray, b1: np.ndarray,
-                 n_buckets: int, max_rounds: int = 256) -> None:
-    """Vectorized cuckoo insertion of (f, b1) rows into ``table``
+def _bulk_insert(table: np.ndarray, h1: np.ndarray, h2: np.ndarray,
+                 max_rounds: int = 256) -> None:
+    """Vectorized cuckoo insertion of hashed keys into ``table``
     (n_buckets × slots uint16, in place). Raises on overfull — capacity
     is the caller's sizing contract, exactly like a Bloom m_bits."""
+    pf, pb, n_buckets = _fpb(table, h1, h2)
     slots = table.shape[1]
-    pf = f.copy()
-    pb = b1.astype(np.int64).copy()
     for r in range(max_rounds):
         if len(pf) == 0:
             return
@@ -152,24 +136,19 @@ def _bulk_insert(table: np.ndarray, f: np.ndarray, b1: np.ndarray,
     )
 
 
-def _probe_table(table: np.ndarray | None, f: np.ndarray, b1: np.ndarray,
-                 n_buckets: int) -> np.ndarray:
-    if table is None:
-        return np.zeros(len(f), dtype=bool)
+def _probe(table: np.ndarray, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+    f, b1, n_buckets = _fpb(table, h1, h2)
     b2 = _alt_bucket(b1, f, n_buckets)
     return ((table[b1] == f[:, None]).any(axis=1)
             | (table[b2] == f[:, None]).any(axis=1))
 
 
-def _bulk_delete(table: np.ndarray, f: np.ndarray, b1: np.ndarray,
-                 n_buckets: int) -> int:
-    """Remove ONE stored copy per (f, b1) row, in place; returns how many
-    were actually found (deleting a never-inserted key is a no-op here,
-    never a corruption). Scatter conflicts (two deletes aiming at the
-    same physical slot) resolve over rounds."""
+def _bulk_delete(table: np.ndarray, h1: np.ndarray, h2: np.ndarray) -> None:
+    """Remove ONE stored copy per key, in place (deleting a never-inserted
+    key is a no-op here, never a corruption). Scatter conflicts (two
+    deletes aiming at the same physical slot) resolve over rounds."""
+    pf, pb, n_buckets = _fpb(table, h1, h2)
     slots = table.shape[1]
-    pf, pb = f.copy(), b1.astype(np.int64).copy()
-    removed = 0
     while len(pf):
         b2 = _alt_bucket(pb, pf, n_buckets)
         m1 = table[pb] == pf[:, None]
@@ -187,19 +166,15 @@ def _bulk_delete(table: np.ndarray, f: np.ndarray, b1: np.ndarray,
         sel = np.zeros(len(tgt_b), dtype=bool)
         sel[keep_idx] = True
         table[tgt_b[sel], tgt_s[sel]] = 0
-        removed += int(sel.sum())
         # rows whose slot was taken by an earlier duplicate retry
         retry = np.zeros(len(pf), dtype=bool)
         retry[np.flatnonzero(found)[~sel]] = True
         pf, pb = pf[retry], pb[retry]
-    return removed
 
 
-class CuckooShardSet:
-    """Distributed directory of cuckoo-filter shards — BloomShardSet's
-    deletable sibling, same duck-typed surface (``shards_df``,
-    ``directory_bytes``, ``broadcast_max_bytes``, ``build``,
-    ``maybe_seen_col``) plus ``delete``.
+class CuckooShardSet(ShardDirectory):
+    """Deletable directory: each cell is a cuckoo table — BloomShardSet's
+    sibling, same ShardDirectory surface plus ``delete``.
 
     Sizing: capacity per shard = buckets_per_shard × slots fingerprints;
     keep load ≤ ~0.95 (insert raises on overflow rather than degrading).
@@ -209,162 +184,29 @@ class CuckooShardSet:
     def __init__(self, n_shards: int = 8, buckets_per_shard: int = 1 << 12,
                  slots: int = 4, shards_df: DataFrame | None = None,
                  broadcast_max_bytes: int = 4 << 20):
-        assert buckets_per_shard & (buckets_per_shard - 1) == 0, "pow2 buckets"
-        self.n_shards = n_shards
+        if buckets_per_shard <= 0 or buckets_per_shard & (buckets_per_shard - 1):
+            raise ValueError(
+                f"buckets_per_shard must be a power of two, got {buckets_per_shard}"
+            )
+        super().__init__(n_shards, shards_df, broadcast_max_bytes)
         self.n_buckets = buckets_per_shard
         self.slots = slots
-        self.shards_df = shards_df
-        self.broadcast_max_bytes = broadcast_max_bytes
-        self._dir_bc = None
+        self.cell_bytes = buckets_per_shard * slots * 2
+        self.table_name = f"cuckoo_shards_{n_shards}x{buckets_per_shard}x{slots}"
+        self.codec = CellCodec(decode=partial(_decode, slots=slots),
+                               insert=_bulk_insert, probe=_probe,
+                               delete=_bulk_delete)
 
-    # ------------------------------------------------------------ internals
-    def _with_shard(self, df: DataFrame, sha1_col: str) -> DataFrame:
-        return with_hash_cols(df, sha1_col).withColumn(
-            "_shard", F.pmod(F.col("_h1"), F.lit(self.n_shards)).cast("int")
-        )
-
-
-    # ---------------------------------------------------------------- build
-    def build(self, df: DataFrame, sha1_col: str = "url_sha1",
-              materialize: str = "checkpoint") -> "CuckooShardSet":
-        """Distributed build/extend: keys cogroup with the existing shard
-        rows so each task inserts its shard's keys into its shard's table
-        — tables never leave the executors. Same ``materialize`` contract
-        as BloomShardSet.build (wave loop parquet-truncates its own way).
-        """
-        # close over PRIMITIVES only — a `self` capture would drag the
-        # shards DataFrame/SparkSession into the worker pickle (SPARK-5063)
-        n_buckets, slots = self.n_buckets, self.slots
-
-        def upsert(keys: pd.DataFrame, shard_rows: pd.DataFrame) -> pd.DataFrame:
-            if len(keys) == 0:
-                return shard_rows[["shard", "bits"]]
-            table = (_decode(shard_rows["bits"].iloc[0], n_buckets, slots)
-                     if len(shard_rows) else
-                     np.zeros((n_buckets, slots), dtype=np.uint16))
-            f, b1 = _fpb(keys, n_buckets)
-            _bulk_insert(table, f, b1, n_buckets)
-            return pd.DataFrame({"shard": [int(keys["_shard"].iloc[0])],
-                                 "bits": [table.tobytes()]})
-
-        keys = (self._with_shard(df, sha1_col)
-                .select("_h1", "_h2", "_shard"))
-        existing = (self.shards_df if self.shards_df is not None
-                    else keys.sparkSession.createDataFrame([], SHARD_SCHEMA))
-        merged = (
-            keys.groupBy("_shard")
-            .cogroup(existing.groupBy("shard"))
-            .applyInPandas(upsert, schema=SHARD_SCHEMA)
-        )
-        out = merged.localCheckpoint() if materialize == "checkpoint" else merged
-        return CuckooShardSet(self.n_shards, self.n_buckets, self.slots,
-                              shards_df=out,
-                              broadcast_max_bytes=self.broadcast_max_bytes)
-
-    # --------------------------------------------------------------- delete
     def delete(self, df: DataFrame, sha1_col: str = "url_sha1",
                materialize: str = "checkpoint") -> "CuckooShardSet":
         """Evict keys (recrawl path): one stored fingerprint per key is
         removed, so a later probe reports the URL unseen and the frontier
-        re-admits it. Same cogrouped, executor-resident shape as build;
-        deleting an absent key is a no-op."""
-        n_buckets, slots = self.n_buckets, self.slots
-
-        def drop(keys: pd.DataFrame, shard_rows: pd.DataFrame) -> pd.DataFrame:
-            if len(shard_rows) == 0:
-                # deletions aimed at a shard that never existed: no-op
-                return pd.DataFrame(
-                    {"shard": pd.array([], dtype="int32"),
-                     "bits": pd.array([], dtype=object)}
-                )
-            table = _decode(shard_rows["bits"].iloc[0], n_buckets, slots)
-            if len(keys):
-                f, b1 = _fpb(keys, n_buckets)
-                _bulk_delete(table, f, b1, n_buckets)
-            return pd.DataFrame({"shard": [int(shard_rows["shard"].iloc[0])],
-                                 "bits": [table.tobytes()]})
-
+        re-admits it. Same cogrouped, executor-resident shape as an
+        incremental build; deleting an absent key is a no-op. Same
+        ``materialize`` contract as ``build``."""
         if self.shards_df is None:
             return self
-        keys = self._with_shard(df, sha1_col).select("_h1", "_h2", "_shard")
-        merged = (
-            keys.groupBy("_shard")
-            .cogroup(self.shards_df.groupBy("shard"))
-            .applyInPandas(drop, schema=SHARD_SCHEMA)
-        )
-        out = merged.localCheckpoint() if materialize == "checkpoint" else merged
-        return CuckooShardSet(self.n_shards, self.n_buckets, self.slots,
-                              shards_df=out,
-                              broadcast_max_bytes=self.broadcast_max_bytes)
-
-    # ---------------------------------------------------------------- probe
-    @property
-    def directory_bytes(self) -> int:
-        return self.n_shards * self.n_buckets * self.slots * 2
-
-    def _directory_broadcast(self):
-        if self._dir_bc is None:
-            from pyspark.sql import SparkSession
-
-            directory = {
-                int(r["shard"]): np.frombuffer(r["bits"], dtype=np.uint16)
-                .reshape(self.n_buckets, self.slots)
-                for r in self.shards_df.collect()
-            }
-            sc = SparkSession.getActiveSession().sparkContext
-            self._dir_bc = sc.broadcast(directory)
-        return self._dir_bc
-
-    def maybe_seen_col(self, df: DataFrame, sha1_col: str = "url_sha1") -> DataFrame:
-        """Adds boolean ``_maybe_seen`` — adaptive broadcast/cogroup probe,
-        bit-for-bit the BloomShardSet contract so plans/wave.filter_unseen
-        takes either directory unmodified."""
-        n_buckets, slots = self.n_buckets, self.slots
-        cols = df.columns
-        if self.shards_df is None:
-            return df.withColumn("_maybe_seen", F.lit(False))
-
-        if self.directory_bytes <= self.broadcast_max_bytes:
-            bc = self._directory_broadcast()
-
-            @F.pandas_udf("boolean")
-            def cuckoo_probe(h1s: pd.Series, h2s: pd.Series,
-                             shards: pd.Series) -> pd.Series:
-                directory = bc.value
-                h1 = h1s.to_numpy(dtype=np.uint64)
-                h2 = h2s.to_numpy(dtype=np.uint64)
-                sh = shards.to_numpy(dtype=np.int64)
-                f = _fingerprint(h2)
-                b1 = _bucket1(h1, n_buckets)
-                hit = np.zeros(len(h1), dtype=bool)
-                for s in np.unique(sh):
-                    m = sh == s
-                    hit[m] = _probe_table(directory.get(int(s)), f[m], b1[m],
-                                          n_buckets)
-                return pd.Series(hit)
-
-            hashed = self._with_shard(df, sha1_col)
-            return hashed.withColumn(
-                "_maybe_seen",
-                cuckoo_probe(F.col("_h1"), F.col("_h2"), F.col("_shard")),
-            ).select(*cols, "_maybe_seen")
-
-        hashed = self._with_shard(df, sha1_col)
-        out_schema = ", ".join(
-            f"{fld.name} {fld.dataType.simpleString()}" for fld in df.schema.fields
-        ) + ", _maybe_seen boolean"
-
-        def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            table = (_decode(right["bits"].iloc[0], n_buckets, slots)
-                     if len(right) else None)
-            f, b1 = _fpb(left, n_buckets)
-            hit = _probe_table(table, f, b1, n_buckets)
-            return left.drop(columns=["_h1", "_h2", "_shard"]).assign(
-                _maybe_seen=hit)
-
-        return (
-            hashed.groupBy("_shard")
-            .cogroup(self.shards_df.groupBy("shard"))
-            .applyInPandas(probe, schema=out_schema)
-            .select(*cols, "_maybe_seen")
+        keys = self._keys(df, sha1_col)
+        return self._finish(
+            self._cogroup(keys, self.codec.delete, create=False), materialize
         )

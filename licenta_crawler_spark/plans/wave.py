@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -33,7 +34,13 @@ from licenta_crawler_spark.functions.urlnorm import cached_canon_sha1
 from licenta_crawler_spark.operators.fetch import fetch_batches
 from licenta_crawler_spark.operators.parse import parse_pages, parse_sitemaps
 from licenta_crawler_spark.operators.politeness import advance_clocks, schedule_fetches
-from licenta_crawler_spark.operators.seen import BloomShardSet, filter_unseen, first_discovery
+from licenta_crawler_spark.operators.cuckoo import CuckooShardSet
+from licenta_crawler_spark.operators.seen import (
+    BloomShardSet,
+    ShardDirectory,
+    filter_unseen,
+    first_discovery,
+)
 from licenta_crawler_spark.plans import schemas
 
 SHELF_LAST = 1 << 30  # shelf sorts after its products (P3 batch order)
@@ -82,7 +89,6 @@ class EngineConfig:
     bloom_shards: int = 8
     bloom_bits: int = 1 << 18
     bloom_k: int = 7
-    use_bloom: bool = True
     # adaptive engagement: below this many seen URLs the exact anti-join
     # is cheaper than building+probing the shard directory (2 extra Spark
     # jobs per wave), so D1 runs join-only; crossing the threshold
@@ -187,9 +193,15 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.resolver_bc = resolver_bc
-        self.robots = robots.cache()
         self.cfg = config or EngineConfig()
+        if self.cfg.fetch_sharding not in ("roundrobin", "hrw"):
+            raise ValueError(
+                "fetch_sharding must be 'roundrobin' or 'hrw', "
+                f"got {self.cfg.fetch_sharding!r}"
+            )
         self.bloom = self._new_directory()
+        self.robots = robots.cache()
+        self._job_prefix = f"crawl-{uuid.uuid4().hex[:12]}"
         # scratch dir for per-wave state truncation when no durable
         # checkpointer is configured (see _checkpoint for why parquet)
         self._scratch = tempfile.mkdtemp(prefix="lcs-state-")
@@ -355,32 +367,32 @@ class CrawlEngine:
     def _begin_wave(self, st: CrawlState, phase: str) -> str:
         """Tag every Spark job this wave schedules so the per-wave job
         count lands in the metrics table (regression guard: per-wave
-        driver overhead is proportional to jobs scheduled)."""
-        group = f"wave-{st.wave}-{phase}"
+        driver overhead is proportional to jobs scheduled). The group is
+        unique to this engine, so another engine's crawl in the same
+        session never adds to its count."""
+        group = f"{self._job_prefix}-wave-{st.wave}-{phase}"
         self.spark.sparkContext.setJobGroup(group, f"crawl {phase} wave {st.wave}")
         return group
 
-    def _jobs_in_group(self, group: str) -> int:
+    def _end_wave(self, group: str) -> int:
+        """Clear the wave's job group (later jobs on this thread are not
+        the wave's) and return how many jobs it ran (-1 if unknown)."""
+        sc = self.spark.sparkContext
+        sc._jsc.clearJobGroup()
         try:
-            tracker = self.spark.sparkContext.statusTracker()
-            return len(tracker.getJobIdsForGroup(group))
+            return len(sc.statusTracker().getJobIdsForGroup(group))
         except Exception:
             return -1
 
-    def _new_directory(self, shards_df: DataFrame | None = None):
-        """Fresh (or re-wrapped) URL-seen directory for the configured
-        backend — the two classes share the duck-typed surface
-        filter_unseen consumes (build / maybe_seen_col / shards_df)."""
-        if self.cfg.seen_filter == "cuckoo":
-            from licenta_crawler_spark.operators.cuckoo import CuckooShardSet
-
-            return CuckooShardSet(
-                self.cfg.bloom_shards, self.cfg.cuckoo_buckets,
-                shards_df=shards_df,
-            )
-        return BloomShardSet(
-            self.cfg.bloom_shards, self.cfg.bloom_bits, self.cfg.bloom_k,
-            shards_df=shards_df,
+    def _new_directory(self) -> ShardDirectory:
+        """Empty URL-seen directory for the configured backend."""
+        cfg = self.cfg
+        if cfg.seen_filter == "bloom":
+            return BloomShardSet(cfg.bloom_shards, cfg.bloom_bits, cfg.bloom_k)
+        if cfg.seen_filter == "cuckoo":
+            return CuckooShardSet(cfg.bloom_shards, cfg.cuckoo_buckets)
+        raise ValueError(
+            f"seen_filter must be 'bloom' or 'cuckoo', got {cfg.seen_filter!r}"
         )
 
     def learn_dust_rules(self, st: CrawlState, min_tests: int = 1) -> list:
@@ -436,7 +448,7 @@ class CrawlEngine:
         the canonical final_url), and the documents sink upserts by
         doc_id (latest wave wins) — so the stale row is replaced when
         the refetch lands, which is the point of evicting."""
-        if self.cfg.seen_filter != "cuckoo":
+        if not self.bloom.deletable:
             raise ValueError(
                 "evict_seen needs seen_filter='cuckoo' — the Bloom "
                 "directory is append-only (bits cannot be unset)"
@@ -451,10 +463,10 @@ class CrawlEngine:
         if self.bloom.shards_df is not None:
             deleted = self.bloom.delete(keys.select("url_sha1"),
                                         materialize="none")
-            shards = self._materialize(self._bloom_table(),
+            shards = self._materialize(self.bloom.table_name,
                                        deleted.shards_df, st.wave,
                                        force_parquet=True)
-            self.bloom = self._new_directory(shards_df=shards)
+            self.bloom = self.bloom.with_shards(shards)
         self._seen_count = new_log.count()
         return dataclasses.replace(st, crawl_log=new_log)
 
@@ -467,21 +479,9 @@ class CrawlEngine:
         tree. Parquet gives honest physical stats at constant cost; with a
         checkpointer configured the directory also becomes resumable state."""
         built = self.bloom.build(log_rows.select("url_sha1"), materialize="none")
-        shards = self._materialize(self._bloom_table(), built.shards_df, wave,
-                                   force_parquet=True)
-        self.bloom = self._new_directory(shards_df=shards)
-
-    def _bloom_table(self) -> str:
-        """Committed shard-directory table name, keyed by the Bloom
-        CONFIG: a resumed engine with a different (shards, bits, k) gets
-        a clean KeyError -> full rebuild instead of silently probing a
-        directory hashed under different parameters (which would create
-        Bloom false negatives -> re-crawled URLs)."""
-        if self.cfg.seen_filter == "cuckoo":
-            return (f"cuckoo_shards_{self.cfg.bloom_shards}"
-                    f"x{self.cfg.cuckoo_buckets}x4")
-        return (f"bloom_shards_{self.cfg.bloom_shards}"
-                f"x{self.cfg.bloom_bits}x{self.cfg.bloom_k}")
+        shards = self._materialize(self.bloom.table_name, built.shards_df,
+                                   wave, force_parquet=True)
+        self.bloom = self.bloom.with_shards(shards)
 
     def _note_new_seen(self, st: CrawlState, log_rows: DataFrame,
                        n_new: int, wave: int) -> None:
@@ -613,7 +613,7 @@ class CrawlEngine:
                 .drop("_tpl")
             )
         c = first_discovery(c, [F.col("ord0"), F.col("ord1")])  # D2
-        new = filter_unseen(c, st.crawl_log, self.bloom if self.cfg.use_bloom else None)  # D1
+        new = filter_unseen(c, st.crawl_log, self.bloom)  # D1
         w = Window.partitionBy("host").orderBy("ord0", "ord1")
         new = (
             new.join(F.broadcast(self._seq_base(st)), "host", "left")
@@ -704,6 +704,7 @@ class CrawlEngine:
         sched = sched.localCheckpoint()
         n_sched = sched.count()
         if n_sched == 0:
+            self._end_wave(group)
             return False
 
         fetched = fetch_batches(
@@ -764,7 +765,7 @@ class CrawlEngine:
             F.lit("QUEUED").alias("state"), F.lit(0).alias("retries"),
         )
         n_new = log_rows.count()
-        if self.cfg.use_bloom and n_new:
+        if n_new:
             self._note_new_seen(st, log_rows, n_new, wave)
         self._checkpoint(
             st,
@@ -782,7 +783,7 @@ class CrawlEngine:
         )
         st.metrics.append(
             {"wave": wave, "phase": "sitemap", "n_fetched": n_sched,
-             "n_new": n_new, "spark_jobs": self._jobs_in_group(group)}
+             "n_new": n_new, "spark_jobs": self._end_wave(group)}
         )
         st.wave += 1
         return True
@@ -820,6 +821,7 @@ class CrawlEngine:
         ).localCheckpoint()
         n_sched = sched.count()
         if n_sched == 0:
+            self._end_wave(group)
             return False
 
         # attach the per-row retry count so the fetch stage knows which
@@ -998,7 +1000,7 @@ class CrawlEngine:
 
         n_new = log_rows.count()
         n_docs = docs.count()
-        if self.cfg.use_bloom and n_new:
+        if n_new:
             self._note_new_seen(st, log_rows, n_new, wave)
         reval_tables = {}
         if self.cfg.revalidate:
@@ -1056,7 +1058,7 @@ class CrawlEngine:
         st.metrics.append(
             {"wave": wave, "phase": "browse", "n_fetched": n_sched,
              "n_new": n_new, "n_docs": n_docs,
-             "spark_jobs": self._jobs_in_group(group)}
+             "spark_jobs": self._end_wave(group)}
         )
         st.wave += 1
         return True
@@ -1097,30 +1099,22 @@ class CrawlEngine:
             wave=wave,
             engine=self,
         )
-        if self.cfg.use_bloom:
-            self._seen_count = st.crawl_log.count()
-            if self._seen_count >= self.cfg.bloom_min_seen:
-                # prefer the committed shard directory (the whole point of
-                # checkpointing it every wave): loading n_shards tiny rows
-                # beats re-hashing the full seen set, which at 10^10-key
-                # scale is a full-corpus pass per restart
-                try:
-                    shards = catalog.load(
-                        spark, self._bloom_table()
-                    ).localCheckpoint()
-                    probe = shards.limit(1).collect()
-                    expected_bytes = (
-                        self.cfg.cuckoo_buckets * 4 * 2
-                        if self.cfg.seen_filter == "cuckoo"
-                        else self.cfg.bloom_bits // 8
-                    )
-                    if probe and len(probe[0]["bits"]) != expected_bytes:
-                        raise KeyError("seen-directory config changed; rebuild")
-                    self.bloom = self._new_directory(shards_df=shards)
-                except KeyError:
-                    self.bloom = self._new_directory().build(
-                        st.crawl_log.select("url_sha1")
-                    )
+        self._seen_count = st.crawl_log.count()
+        if self._seen_count >= self.cfg.bloom_min_seen:
+            # prefer the committed shard directory (the whole point of
+            # checkpointing it every wave): loading n_shards tiny rows
+            # beats re-hashing the full seen set, which at 10^10-key
+            # scale is a full-corpus pass per restart
+            try:
+                shards = catalog.load(spark, self.bloom.table_name).localCheckpoint()
+                probe = shards.limit(1).collect()
+                if probe and len(probe[0]["bits"]) != self.bloom.cell_bytes:
+                    raise KeyError("seen-directory config changed; rebuild")
+                self.bloom = self.bloom.with_shards(shards)
+            except KeyError:
+                self.bloom = self.bloom.with_shards(None).build(
+                    st.crawl_log.select("url_sha1")
+                )
         return st
 
     # ---------------------------------------------------------------- run

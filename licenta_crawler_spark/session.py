@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory: in local mode the driver JVM also
+    runs the executors, and a heap sized past physical memory lets the JVM
+    grow until the OS kills it instead of collecting garbage."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "licenta_crawler_spark",
     parallelism: int | None = None,
@@ -24,6 +32,9 @@ def get_spark(
     parallelism: local[N] thread count; None -> local[*] (all cores).
     shuffle_partitions: defaults to parallelism (local mode wants
     ~cores, not the 200 default).
+    extra_conf: applied last, so it overrides any config set here —
+    e.g. ``{"spark.driver.memory": "1g"}`` instead of the default heap of
+    half the host's physical memory.
     """
     master = f"local[{parallelism}]" if parallelism else "local[*]"
     n_shuffle = shuffle_partitions or parallelism or 32
@@ -43,7 +54,7 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
         .config("spark.locality.wait", "0s")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", _default_driver_memory())
     )
     # JVM flag hook (GC experiments — tools/stage_breakdown.py findings):
     # local mode runs executors inside the driver JVM, so driver opts
